@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import build_cube
 from mongo_olap_spark.cube.spec import CubeSpec
-from mongo_olap_spark.cube.table_format import TableFormatAdapter
 
 #: manifest key for the single pseudo-partition of an unpartitioned cube
 FLAT_KEY = "__all__"
@@ -180,11 +179,13 @@ def _sum_level_rows(entries: dict[str, dict]) -> dict[str, int]:
     return totals
 
 
-class CubeCatalog(TableFormatAdapter):
-    """Parquet + snapshot-manifest implementation of the cube store's
-    table-format contract (see cube/table_format.py — instance #1 of
-    the Delta/Iceberg swap seam; the MERGE-semantics contract suite in
-    tests/test_table_format_contract.py runs against the ABC only)."""
+class CubeCatalog:
+    """The cube store: parquet cells under a snapshot manifest, with
+    the properties a transactional table format gives (snapshot
+    reads, version-fenced commits, partition-scoped merges, time
+    travel, vacuum, per-stream idempotency watermarks). The
+    MERGE-semantics suite in tests/test_table_format_contract.py pins
+    them."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -446,7 +447,8 @@ class CubeCatalog(TableFormatAdapter):
         pinned with the spec that wrote it (``get_spec(version=…)``),
         so time travel across the evolution answers with the
         HISTORICAL measure set. IVM picks the new spec up on its next
-        batch (``commit_partitions`` re-reads the spec).
+        batch: ``CubeMaintainer`` holds only the cube's name and reads
+        the spec committed at the version each batch fences on.
 
         Contract: ``source`` must be the source state the cube
         currently reflects (same contract as :meth:`refresh`). The

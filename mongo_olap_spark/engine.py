@@ -40,7 +40,6 @@ class OlapEngine:
         self.catalog = CubeCatalog(spark, root)
         self.router = CubeRouter(self.catalog)
         self.store = ParquetCollectionStore(spark, os.path.join(root, "collections"))
-        self._maintainers: dict[str, CubeMaintainer] = {}
 
     # -- materialized collections ($out / $merge) -------------------------
     def materialize_pipeline(
@@ -247,7 +246,6 @@ class OlapEngine:
         return self.catalog.list_cubes()
 
     def drop_cube(self, name: str) -> None:
-        self._maintainers.pop(name, None)
         self.catalog.drop(name)
 
     def refresh_cube(self, name: str, source: DataFrame) -> DataFrame:
@@ -257,13 +255,11 @@ class OlapEngine:
                     drop: list | None = None,
                     source: DataFrame | None = None) -> DataFrame:
         """Add/drop measures on a live cube without rebuilding the
-        surviving ones (catalog.evolve). The cached maintainer is
-        invalidated so the next CDC batch aggregates the NEW measure
-        set; old snapshots stay pinned with their own specs."""
-        out = self.catalog.evolve(name, add=tuple(add or ()),
-                                  drop=tuple(drop or ()), source=source)
-        self._maintainers.pop(name, None)
-        return out
+        surviving ones (catalog.evolve). Maintainers read the spec per
+        batch, so the next CDC batch aggregates the NEW measure set;
+        old snapshots stay pinned with their own specs."""
+        return self.catalog.evolve(name, add=tuple(add or ()),
+                                   drop=tuple(drop or ()), source=source)
 
     # -- incremental maintenance ------------------------------------------
     def apply_cdc(self, cube: str, batch: DataFrame, batch_id: int,
@@ -271,7 +267,8 @@ class OlapEngine:
         """Apply one CDC batch (doc columns + mult ±1) synchronously.
         Returns True when applied, False when the idempotence watermark
         skipped the batch as a replay (batch_id ≤ last committed)."""
-        maint = self._maintainer(cube, source_for_repair)
+        maint = CubeMaintainer(self.catalog, cube,
+                               source_for_repair=source_for_repair)
         return maint.apply_batch(batch, batch_id)
 
     def pump_cdc(self, cube: str, stream, *,
@@ -299,10 +296,7 @@ class OlapEngine:
 
         Returns ``{"batches": n, "changes": n, "resume_token": tok}``.
         """
-        from mongo_olap_spark.streaming.pipeline import CubeMaintainer
-
-        spec = self.catalog.get_spec(cube)
-        maint = CubeMaintainer(self.catalog, spec,
+        maint = CubeMaintainer(self.catalog, cube,
                                source_for_repair=source_for_repair,
                                stream_id="pump")
         committed = self.catalog.last_batch_id(cube, "pump")
@@ -328,19 +322,9 @@ class OlapEngine:
                           source_for_repair: DataFrame | None = None, **trigger):
         """Attach a streaming CDC source; checkpoint_dir is the resume
         token. Returns the StreamingQuery (stop() = pause)."""
-        maint = self._maintainer(cube, source_for_repair)
+        maint = CubeMaintainer(self.catalog, cube,
+                               source_for_repair=source_for_repair)
         return maint.start(cdc_stream, checkpoint_dir, **trigger)
-
-    def _maintainer(self, cube: str, source_for_repair: DataFrame | None) -> CubeMaintainer:
-        if cube not in self._maintainers:
-            self._maintainers[cube] = CubeMaintainer(
-                self.catalog, self.catalog.get_spec(cube),
-                source_for_repair=source_for_repair,
-            )
-        m = self._maintainers[cube]
-        if source_for_repair is not None:
-            m.source_for_repair = source_for_repair
-        return m
 
     # -- query (§3.3) -------------------------------------------------------
     def query(

@@ -1,28 +1,42 @@
 """Continuous cube maintenance: Structured Streaming → signed-delta merge.
 
 ``CubeMaintainer`` keeps a catalog cube fresh from a CDC stream via
-``foreachBatch``:
+``foreachBatch``. Every batch, whatever the cube's shape (plain or
+lattice, time-partitioned or not), runs the same body:
 
     readStream(cdc) → foreachBatch(batch):
+        v     = current_version(cube)                # the read fence
+        spec  = spec committed at v                  # never cached
         deltas = delta_cells(spec, batch)            # signed partials
         merged = merge_cells(touched_cells, deltas)  # §4.3 MERGE
         [recompute_cells(...) for min/max cubes hit by deletes]
-        commit touched partitions + batch id (one atomic manifest flip)
+        commit_partitions(touched, batch id, read_version=v)
 
 **Partition-scoped**: with a time-partitioned cell table, only the
 partitions the delta touches are read, merged, and rewritten — the
 per-batch write cost is O(|touched cells|), not O(|all cells|);
 untouched partitions are carried by manifest reference and their
-files never move (asserted byte-identical in tests).
+files never move (asserted byte-identical in tests). An unpartitioned
+cube is the one-partition case: its touched set is ``[FLAT_KEY]``,
+known without a Spark job.
+
+**Fenced**: the commit names the version its merge base was read at,
+so a concurrent writer that changed a touched partition in between
+makes this commit raise ``CommitConflict`` instead of overwriting the
+winner's cells. Two writers sharing an unpartitioned cube therefore
+conflict loudly; writers on disjoint partitions both land.
+
+**Spec per batch**: the maintainer holds the cube's name, not its
+spec. Each batch reads the spec embedded in the manifest version it
+fences on (plus lattice levels and the partition dimension), so a
+measure added by ``CubeCatalog.evolve`` is maintained from the next
+batch on.
 
 Exactly-once: Spark's checkpoint gives at-least-once foreachBatch
 delivery; idempotency comes from the batch-id high-watermark stored
 *inside the manifest* — data and watermark commit with one atomic
 rename, so a crash anywhere leaves either the old snapshot+watermark
 (batch replays onto unchanged state) or the new pair (replay skipped).
-(This is the public foreachBatch-MERGE idiom; with Delta/Iceberg the
-manifest flip becomes a transactional MERGE and the watermark a txn
-property.)
 
 Path A (no deletes in the domain) is also provided:
 ``update_mode_aggregation`` — plain streaming groupBy/agg with
@@ -36,8 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube.build import delta_cells
-from mongo_olap_spark.cube.catalog import CubeCatalog, partition_key_col
+from mongo_olap_spark.cube.catalog import FLAT_KEY, CubeCatalog, partition_key_col
 from mongo_olap_spark.cube.ivm import affected_cells, merge_cells, recompute_cells
+from mongo_olap_spark.cube.lattice import LEVEL_COL, delta_cells_lattice
 from mongo_olap_spark.cube.spec import CubeSpec
 
 
@@ -48,13 +63,13 @@ class CubeMaintainer:
     def __init__(
         self,
         catalog: CubeCatalog,
-        spec: CubeSpec,
+        name: str,
         *,
         source_for_repair: DataFrame | None = None,
         stream_id: str = "default",
     ):
         self.catalog = catalog
-        self.spec = spec
+        self.name = name
         self.source_for_repair = source_for_repair
         #: identifies THIS maintainer's checkpoint in the manifest's
         #: per-stream watermark map — two maintainers on one cube must
@@ -66,115 +81,72 @@ class CubeMaintainer:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> bool:
         """Apply one micro-batch. Returns True when the batch was
         applied, False when the watermark skipped it as a replay — so a
-        caller (the service's apply_cdc, ADVICE r13) can report a
-        skipped replay honestly instead of claiming rows were applied."""
-        if batch_id <= self.catalog.last_batch_id(self.spec.name, self.stream_id):
+        caller (the service's apply_cdc) can report a skipped replay
+        honestly instead of claiming rows were applied. Raises
+        ``CommitConflict`` when another writer changed a touched
+        partition after this batch read its merge base."""
+        cat, name = self.catalog, self.name
+        if batch_id <= cat.last_batch_id(name, self.stream_id):
             return False  # replayed batch — idempotent skip
-        spec = self.spec
-        levels = self.catalog.lattice_levels(spec.name)
-        if levels is not None:
-            return self._apply_batch_lattice(batch, batch_id, levels)
-        deltas = delta_cells(spec, batch)
-        pdim = self.catalog.partition_dim(spec)
+        read_version = cat.current_version(name)
+        # the spec that wrote the merge base; version 0 (no snapshot,
+        # e.g. a dropped cube) reads the spec file and fails loudly
+        spec = cat.get_spec(name, version=read_version or None)
+        levels = cat.lattice_levels(name)
 
-        if pdim is not None:
-            # partition-scoped: resolve the (few) touched partition keys
-            # driver-side, read ONLY those partitions' files, and commit
-            # only them — O(|touched|) per batch. The key strings come
-            # from the same expression the writer uses, so they agree
-            # byte-for-byte with the manifest keys.
+        repair = not spec.delete_safe and (
+            batch.filter(F.col("mult") < 0).limit(1).count() > 0
+        )
+        if repair and levels is not None:
+            # per-level cell recompute is a rebuild in disguise
+            raise ValueError(
+                f"lattice cube {name} has min/max measures; deletes are "
+                "not incrementally maintainable per level — refresh instead"
+            )
+        if repair and self.source_for_repair is None:
+            raise ValueError(
+                f"cube {name} has min/max measures; deletes require "
+                "source_for_repair for cell recomputation"
+            )
+
+        if levels is None:
+            deltas, extra_keys = delta_cells(spec, batch), ()
+        else:
+            # ONE signed grouping-sets aggregation delivers deltas for
+            # every materialized level; the merge keys on (dims, level)
+            deltas = delta_cells_lattice(spec, batch, levels)
+            extra_keys = (LEVEL_COL,)
+        pdim = cat.partition_dim(spec)
+        if pdim is None:
+            touched_keys = [FLAT_KEY]
+        else:
+            # resolve the (few) touched partition keys driver-side; the
+            # key strings come from the same expression the writer
+            # uses, so they agree byte-for-byte with the manifest keys
             deltas = deltas.cache()
             touched_keys = [
                 r[0] for r in deltas.select(partition_key_col(pdim)).distinct().collect()
             ]
-            read_version = self.catalog.current_version(spec.name)
-            cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
-        else:
-            touched_keys = None
-            cells = self.catalog.cells(spec.name)
-
-        merged = merge_cells(cells, deltas, spec)
-
-        if not spec.delete_safe:
-            has_deletes = batch.filter(F.col("mult") < 0).limit(1).count() > 0
-            if has_deletes:
-                if self.source_for_repair is None:
-                    raise ValueError(
-                        f"cube {spec.name} has min/max measures; deletes require "
-                        "source_for_repair for cell recomputation"
-                    )
-                touched = affected_cells(spec, delta_cells(spec, batch.filter(F.col("mult") < 0)))
+        try:
+            cells = cat.cells_for_partitions(name, touched_keys)
+            merged = merge_cells(cells, deltas, spec, extra_keys=extra_keys)
+            if repair:
+                touched = affected_cells(
+                    spec, delta_cells(spec, batch.filter(F.col("mult") < 0)))
                 merged = recompute_cells(spec, self.source_for_repair, merged, touched)
-
-        # no checkpoint/MVCC dance: the commit writes NEW immutable
-        # files and flips the manifest pointer (data + watermark in one
-        # atomic rename); the files `merged` reads stay in place
-        if touched_keys is not None:
-            self.catalog.commit_partitions(
-                spec.name,
+            # the commit writes NEW immutable files and flips the
+            # manifest (data + watermark in one atomic rename); the
+            # files `merged` reads stay in place
+            cat.commit_partitions(
+                name,
                 merged,
                 touched_keys,
                 batch_id=batch_id,
                 stream_id=self.stream_id,
                 read_version=read_version,
             )
+        finally:
             deltas.unpersist()
-        else:
-            self.catalog.overwrite_cells(
-                spec.name, merged, batch_id=batch_id, stream_id=self.stream_id
-            )
-        return True
-
-    def _apply_batch_lattice(
-        self, batch: DataFrame, batch_id: int, levels: list[tuple[str, ...]]
-    ) -> bool:
-        """Incremental maintenance of a multi-level (grouping-sets)
-        cube: ONE signed grouping-sets aggregation of the micro-batch
-        delivers deltas for every materialized level; the merge keys on
-        (dims, __level). Partition-scoping still applies — levels that
-        aggregate the time dim away live in the NULL time partition,
-        which is small by construction (coarse levels have few cells).
-
-        min/max lattice cubes reject deletes: per-level cell recompute
-        is a rebuild in disguise — use a plain cube + lattice rebuild,
-        or a delete-safe measure set, for that workload."""
-        from mongo_olap_spark.cube.lattice import LEVEL_COL, delta_cells_lattice
-
-        spec = self.spec
-        if not spec.delete_safe:
-            has_deletes = batch.filter(F.col("mult") < 0).limit(1).count() > 0
-            if has_deletes:
-                raise ValueError(
-                    f"lattice cube {spec.name} has min/max measures; deletes are "
-                    "not incrementally maintainable per level — refresh instead"
-                )
-        deltas = delta_cells_lattice(spec, batch, levels)
-        pdim = self.catalog.partition_dim(spec)
-        if pdim is not None:
-            deltas = deltas.cache()
-            touched_keys = [
-                r[0] for r in deltas.select(partition_key_col(pdim)).distinct().collect()
-            ]
-            read_version = self.catalog.current_version(spec.name)
-            cells = self.catalog.cells_for_partitions(spec.name, touched_keys)
-        else:
-            touched_keys = None
-            cells = self.catalog.cells(spec.name)
-        merged = merge_cells(cells, deltas, spec, extra_keys=(LEVEL_COL,))
-        if touched_keys is not None:
-            self.catalog.commit_partitions(
-                spec.name,
-                merged,
-                touched_keys,
-                batch_id=batch_id,
-                stream_id=self.stream_id,
-                read_version=read_version,
-            )
-            deltas.unpersist()
-        else:
-            self.catalog.overwrite_cells(
-                spec.name, merged, batch_id=batch_id, stream_id=self.stream_id
-            )
         return True
 
     # -- stream wiring ------------------------------------------------------
@@ -203,12 +175,12 @@ class MultiCubeMaintainer:
     paid once, and the per-cube work is just the (tiny) delta agg.
     """
 
-    def __init__(self, catalog: CubeCatalog, specs: list[CubeSpec], *,
+    def __init__(self, catalog: CubeCatalog, names: list[str], *,
                  sources_for_repair: dict[str, DataFrame] | None = None):
         repair = sources_for_repair or {}
         self.children = [
-            CubeMaintainer(catalog, s, source_for_repair=repair.get(s.name))
-            for s in specs
+            CubeMaintainer(catalog, n, source_for_repair=repair.get(n))
+            for n in names
         ]
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:

@@ -33,7 +33,7 @@ def test_streaming_maintenance_matches_batch(spark, events, cdc_dir, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     # start from the empty cube
     cat.create(EVENTS_CUBE, events.limit(0))
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
 
     stream = (
         spark.readStream.schema(CDC_SCHEMA)
@@ -51,7 +51,7 @@ def test_streaming_maintenance_matches_batch(spark, events, cdc_dir, tmp_path):
 def test_batch_replay_is_idempotent(spark, events, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create(EVENTS_CUBE, events.limit(0))
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
     batch = cdc_from_events(events).filter(F.col("op") == "insert").limit(100)
     maint.apply_batch(batch, 0)
     once = rows_set(cat.cells(EVENTS_CUBE.name))
@@ -75,7 +75,7 @@ def test_multi_cube_single_pass(spark, events, cdc_dir, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create(EVENTS_CUBE, events.limit(0))
     cat.create(hourly, events.limit(0))
-    maint = MultiCubeMaintainer(cat, [EVENTS_CUBE, hourly])
+    maint = MultiCubeMaintainer(cat, [EVENTS_CUBE.name, hourly.name])
     stream = (
         spark.readStream.schema(CDC_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -126,7 +126,7 @@ def test_freshness_every_microbatch_end_to_end(spark, events, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create(EVENTS_CUBE, events.limit(0))
     name = EVENTS_CUBE.name
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
 
     applied_ids: set[int] = set()
 
@@ -291,12 +291,77 @@ def test_same_partition_conflict_is_detected_not_merged(spark, events, tmp_path)
     merged = merge_cells(cat.cells_for_partitions(name, keys), deltas, EVENTS_CUBE)
     merged = merged.localCheckpoint()  # pin the stale read
     # ...then writer B commits the SAME partition underneath
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 0)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 0)
 
     with pytest.raises(CommitConflict, match="changed under this writer"):
         cat.commit_partitions(name, merged, keys, read_version=read_v)
     # without the fence the stale merge would have been accepted
     cat.commit_partitions(name, merged, keys)  # legacy path still last-wins
+
+
+def test_unpartitioned_shared_cube_conflicts_not_lost(spark, events, tmp_path, monkeypatch):
+    """An unpartitioned cube is the one-partition case of the fenced
+    commit: when writer B commits between writer A's merge-base read
+    and A's commit, A must raise ``CommitConflict`` — never overwrite
+    B's batch while the manifest keeps B's watermark."""
+    from mongo_olap_spark.cube import CubeSpec, Dimension, Measure
+    from mongo_olap_spark.cube.catalog import CommitConflict
+    from mongo_olap_spark.streaming import pipeline
+
+    spec = CubeSpec(
+        name="events_by_type",
+        source="events",
+        dimensions=(Dimension("event_type"),),
+        measures=(Measure("n", "count"), Measure("total_value", "sum", "value")),
+    )
+    cat = CubeCatalog(spark, str(tmp_path / "cubes"))
+    cat.create(spec, events.limit(0))
+    ins = events.withColumn("mult", F.lit(1))
+    batch_a = ins.filter(F.col("event_id") % 2 == 0)
+    batch_b = ins.filter(F.col("event_id") % 2 == 1)
+    ma = CubeMaintainer(cat, spec.name, stream_id="a")
+    mb = CubeMaintainer(cat, spec.name, stream_id="b")
+
+    orig = pipeline.merge_cells
+    fired = []
+
+    def merge_then_race(*args, **kwargs):
+        if not fired:
+            fired.append(True)
+            mb.apply_batch(batch_b, 0)  # B lands inside A's window
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "merge_cells", merge_then_race)
+    with pytest.raises(CommitConflict, match="changed under this writer"):
+        ma.apply_batch(batch_a, 0)
+    assert fired
+
+    assert cat.last_batch_id(spec.name, "a") == -1
+    assert cat.last_batch_id(spec.name, "b") == 0
+    want = rows_set(query_cube(build_cube(spark, spec, batch_b.drop("mult")), spec))
+    assert rows_set(query_cube(cat.cells(spec.name), spec)) == want
+
+
+def test_maintainer_outliving_evolve_maintains_added_measure(spark, events, tmp_path):
+    """A maintainer built before ``evolve(add=…)`` must aggregate the
+    added measure from its next batch on — it reads the spec per batch
+    instead of writing NULL into the new column."""
+    from mongo_olap_spark.cube import Measure
+
+    cat = CubeCatalog(spark, str(tmp_path / "cubes"))
+    name = EVENTS_CUBE.name
+    even = events.filter(F.col("event_id") % 2 == 0)
+    odd = events.filter(F.col("event_id") % 2 == 1)
+    cat.create(EVENTS_CUBE, even)
+    maint = CubeMaintainer(cat, name)
+
+    cat.evolve(name, add=[Measure("max_value", "max", "value")], source=even)
+    maint.apply_batch(odd.withColumn("mult", F.lit(1)), 0)
+
+    spec = cat.get_spec(name)
+    got = query_cube(cat.cells(name), spec, measures=["max_value"])
+    want = query_cube(build_cube(spark, spec, events), spec, measures=["max_value"])
+    assert rows_set(got) == rows_set(want)
 
 
 def test_crashed_pointer_flip_self_heals(spark, events, tmp_path):
@@ -312,7 +377,7 @@ def test_crashed_pointer_flip_self_heals(spark, events, tmp_path):
     v2 = cat.manifest(name)
     one_day = events.filter(F.date_trunc("day", "ts") == "2024-01-03 00:00:00")
     batch = cdc_from_events(one_day).filter(F.col("op") == "insert").limit(40)
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 0)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 0)
     after = cat.manifest(name)
     # simulate the crash: rewind the pointer cache to the old version
     with open(cat._manifest_path(name), "w") as f:
@@ -353,7 +418,7 @@ def test_time_local_batch_rewrites_only_touched_partitions(spark, events, tmp_pa
 
     one_day = events.filter(F.date_trunc("day", "ts") == "2024-01-03 00:00:00")
     batch = cdc_from_events(one_day).filter(F.col("op") == "insert").limit(40)
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 0)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 0)
 
     m1 = cat.manifest(name)
     touched = "2024-01-03T00.00.00"
@@ -393,7 +458,7 @@ def test_reader_snapshot_survives_concurrent_commit_and_vacuum(spark, events, tm
 
     one_day = events.filter(F.date_trunc("day", "ts") == "2024-01-03 00:00:00")
     batch = cdc_from_events(one_day).filter(F.col("op") == "insert").limit(40)
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 7)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 7)
 
     # maintenance committed underneath the reader: same answer
     assert rows_set(old_reader) == before
@@ -446,7 +511,7 @@ def test_lattice_incremental_equals_lattice_rebuild(spark, events, tmp_path):
     half2 = events.filter(F.col("event_id") % 2 == 1)
     cat.create_lattice(EVENTS_CUBE, half1)
     name = EVENTS_CUBE.name
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
 
     batch = cdc_from_events(half2).filter(F.col("op") == "insert")
     maint.apply_batch(batch, 0)
@@ -473,7 +538,7 @@ def test_lattice_deletes_retract_per_level(spark, events, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create_lattice(EVENTS_CUBE, events)
     name = EVENTS_CUBE.name
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
     doomed = events.filter(F.col("event_id") % 5 == 0)
     maint.apply_batch(doomed.withColumn("op", F.lit("delete"))
                       .withColumn("mult", F.lit(-1))
@@ -496,7 +561,7 @@ def test_lattice_minmax_rejects_deletes(spark, events, tmp_path):
     )
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create_lattice(spec, events)
-    maint = CubeMaintainer(cat, spec)
+    maint = CubeMaintainer(cat, spec.name)
     bad = events.limit(5).withColumn("mult", F.lit(-1))
     import pytest as _pytest
 
@@ -515,7 +580,7 @@ def test_snapshot_time_travel(spark, events, tmp_path):
 
     one_day = events.filter(F.date_trunc("day", "ts") == "2024-01-03 00:00:00")
     batch = cdc_from_events(one_day).filter(F.col("op") == "insert").limit(40)
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 0)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 0)
 
     # read the PAST snapshot by version: exactly the pre-batch state
     assert rows_set(cat.cells(name, version=v1)) == before
@@ -539,7 +604,7 @@ def test_compact_preserves_cells_and_reclaims_dirs(spark, events, tmp_path):
 
     cat = CubeCatalog(spark, str(tmp_path / "olap"))
     cat.create(EVENTS_CUBE, events.limit(0))
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
     for i, day in enumerate([5, 12, 19, 26]):
         batch = events.filter(F.dayofmonth("ts") == day).withColumn("mult", F.lit(1))
         maint.apply_batch(batch, i)
@@ -566,7 +631,7 @@ def test_vacuum_grace_window_protects_young_dirs(spark, events, tmp_path):
     name = EVENTS_CUBE.name
     one_day = events.filter(F.date_trunc("day", "ts") == "2024-01-03 00:00:00")
     batch = cdc_from_events(one_day).filter(F.col("op") == "insert").limit(40)
-    CubeMaintainer(cat, EVENTS_CUBE).apply_batch(batch, 0)
+    CubeMaintainer(cat, EVENTS_CUBE.name).apply_batch(batch, 0)
     # superseded v1 partition dir exists, but everything is young
     assert cat.vacuum(name, min_age_s=3600) == []
     removed = cat.vacuum(name)  # no grace: reclaim now
@@ -618,7 +683,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, events, tmp_path):
     cat = CubeCatalog(spark, str(tmp_path / "cubes"))
     cat.create(EVENTS_CUBE, events.limit(0))
     name = EVENTS_CUBE.name
-    maint = CubeMaintainer(cat, EVENTS_CUBE)
+    maint = CubeMaintainer(cat, EVENTS_CUBE.name)
 
     full_cdc = cdc_from_events(events)
     days = sorted(
@@ -684,8 +749,8 @@ def test_per_stream_batch_watermarks(spark, events, tmp_path):
         r[0] for r in cdc.select(F.dayofmonth("stream_ts")).distinct().collect()
     )
     a_days, b_days = days[::2], days[1::2]
-    ma = CubeMaintainer(cat, EVENTS_CUBE, stream_id="stream_a")
-    mb = CubeMaintainer(cat, EVENTS_CUBE, stream_id="stream_b")
+    ma = CubeMaintainer(cat, EVENTS_CUBE.name, stream_id="stream_a")
+    mb = CubeMaintainer(cat, EVENTS_CUBE.name, stream_id="stream_b")
 
     def day_batch(d):
         return cdc.filter(F.dayofmonth("stream_ts") == d)
@@ -851,7 +916,7 @@ def test_pump_cdc_stale_token_replay_fenced(spark, events, cdc_dir, tmp_path):
     # replay the exact same pull (resume_after=None = stale token)
     batch, tok = stream.read_change_stream(spark, resume_after=None,
                                            max_changes=137)
-    maint = CubeMaintainer(e.catalog, EVENTS_CUBE, stream_id="pump")
+    maint = CubeMaintainer(e.catalog, EVENTS_CUBE.name, stream_id="pump")
     assert maint.apply_batch(batch, tok) is False  # fenced
     assert rows_set(e.catalog.cells(EVENTS_CUBE.name)) == once
 

@@ -1,11 +1,10 @@
-"""MERGE-semantics contract suite for the table-format swap seam
-(round-5 task 7).
+"""MERGE-semantics contract suite for the cube store.
 
-Every test here is written against ``TableFormatAdapter`` ONLY — no
-manifest files, no ``_write_*`` internals — so the identical suite is
-the acceptance gate for a Delta/Iceberg-backed adapter: add its
-factory to ``ADAPTERS`` (guarded by an import-try) and nothing else
-changes. ``CubeCatalog`` is instance #1.
+Every test here goes through ``CubeCatalog``'s public surface only — no
+manifest files, no ``_write_*`` internals — so it pins the
+transactional-table-format properties the engine relies on: snapshot
+reads, version-fenced partition commits, eviction, time travel,
+atomic watermarks, vacuum and compaction.
 """
 
 from __future__ import annotations
@@ -15,24 +14,14 @@ from pyspark.sql import functions as F
 
 from mongo_olap_spark.cube import CubeCatalog, build_cube
 from mongo_olap_spark.cube.catalog import CommitConflict, partition_key_col
-from mongo_olap_spark.cube.table_format import DeltaTableFormat, TableFormatAdapter
 from mongo_olap_spark.queries.core import EVENTS_CUBE
 
-#: adapter factories under contract: (id, factory(spark, root)).
-#: A Delta-backed implementation registers itself here once its
-#: environment exists — the suite body is implementation-agnostic.
-ADAPTERS = [("manifest", CubeCatalog)]
-try:  # pragma: no cover - not installed in this environment
-    import delta  # noqa: F401
 
-    ADAPTERS.append(("delta", DeltaTableFormat))
-except ImportError:
-    pass
-
-
-@pytest.fixture(params=ADAPTERS, ids=[a[0] for a in ADAPTERS])
-def fmt(request, spark, tmp_path) -> TableFormatAdapter:
-    return request.param[1](spark, str(tmp_path / "cubes"))
+@pytest.fixture(params=["manifest"])
+def fmt(spark, tmp_path) -> CubeCatalog:
+    """The parquet + snapshot-manifest store (the param id names the
+    storage layout under test)."""
+    return CubeCatalog(spark, str(tmp_path / "cubes"))
 
 
 def rows_set(df):
@@ -48,15 +37,6 @@ def day_key(events, day: int) -> str:
 def day_cells(spark, events, *days):
     src = events.filter(F.dayofmonth("ts").isin(*days))
     return build_cube(spark, EVENTS_CUBE, src)
-
-
-def test_catalog_is_instance_one():
-    assert issubclass(CubeCatalog, TableFormatAdapter)
-    # the maintainer's entire storage dependency is on the contract
-    need = {"create", "cells", "cells_for_partitions", "overwrite_cells",
-            "commit_partitions", "current_version", "last_batch_id",
-            "vacuum", "compact"}
-    assert need <= set(TableFormatAdapter.__abstractmethods__)
 
 
 def test_create_read_roundtrip_and_versioning(fmt, spark, events):
@@ -157,7 +137,3 @@ def test_compact_preserves_content(fmt, spark, events):
     assert rows_set(fmt.cells(name)) == before
     assert fmt.last_batch_id(name) == 1  # watermark survives compaction
 
-
-def test_delta_adapter_refuses_with_recipe():
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        DeltaTableFormat(None, "/tmp/nope")

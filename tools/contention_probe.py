@@ -95,8 +95,7 @@ def worker_main(args) -> int:
     spark = get_spark(f"contention_w{args.worker}", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     catalog = CubeCatalog(spark, args.root)
-    spec = catalog.get_spec(CUBE)
-    maint = CubeMaintainer(catalog, spec, stream_id=f"w{args.worker}")
+    maint = CubeMaintainer(catalog, CUBE, stream_id=f"w{args.worker}")
     cdc = spark.read.parquet(args.cdc).filter(
         shard_col(args.writers) == args.worker
     )

@@ -643,11 +643,11 @@ def main() -> int:
     catalog.create(topk_spec, events.limit(0))
     catalog.create(topby_spec, events.limit(0))
 
-    m_hll = CubeMaintainer(catalog, hll_spec)
-    m_exact = CubeMaintainer(catalog, exact_spec)
-    m_hist = CubeMaintainer(catalog, hist_spec)
-    m_topk = CubeMaintainer(catalog, topk_spec)
-    m_topby = CubeMaintainer(catalog, topby_spec)
+    m_hll = CubeMaintainer(catalog, hll_spec.name)
+    m_exact = CubeMaintainer(catalog, exact_spec.name)
+    m_hist = CubeMaintainer(catalog, hist_spec.name)
+    m_topk = CubeMaintainer(catalog, topk_spec.name)
+    m_topby = CubeMaintainer(catalog, topby_spec.name)
 
     ib = int(args.batches * 0.6)
     ub = int(args.batches * 0.2)

@@ -380,7 +380,7 @@ def main() -> int:
     reader.start()
 
     rng = random.Random(args.seed)
-    maint = CubeMaintainer(catalog, spec)
+    maint = CubeMaintainer(catalog, spec.name)
     times: list[float] = []
     crashes = replays = 0
     replay_times: list[float] = []
@@ -402,7 +402,7 @@ def main() -> int:
             # fresh one attaches and the checkpoint re-delivers a
             # window of recent batches — watermark must no-op them all
             crashes += 1
-            maint = CubeMaintainer(catalog, spec)
+            maint = CubeMaintainer(catalog, spec.name)
             for j in range(max(0, k - rng.randint(1, 4)), k + 1):
                 t0 = time.perf_counter()
                 maint.apply_batch(batch_df(j), j)
