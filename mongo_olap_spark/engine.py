@@ -91,84 +91,33 @@ class OlapEngine:
         greedy view selection — plans/advisor.py).
 
         ``workload`` entries are ``(source_name, pipeline[, weight])``
-        where each pipeline is a routable ``[$match?, $group]``
-        aggregate (the same shape ``create_cube_from_pipeline``
-        accepts) — or (r10) a single-accumulator SPECIAL-family
-        pipeline ($median / $percentile / $minN / $maxN / $topN /
-        $bottomN / $addToSet+$size), which the advisor decomposes
-        into the exact two-level cube shape the router serves it
-        from — and weight is its query frequency. Returns an
+        where each pipeline is any aggregate :meth:`query_pipeline`
+        routes (``plans.pipeline_compiler.routed_requests_from_pipeline``:
+        plain, special-family, mixed-family, ``$sortByCount``/``$count``)
+        and weight is its query frequency. Each parsed request part
+        enters the workload at the pipeline's weight — exactly the
+        requests the serving side will issue (advisor._signature
+        decomposes a special measure into the two-level shape it is
+        served from). Returns an
         :class:`~mongo_olap_spark.plans.advisor.Advice`; with
         ``apply=True`` the recommended cubes are also created from
         ``sources`` and registered in the catalog, ready to route.
         """
         from mongo_olap_spark.plans.advisor import WorkloadQuery, advise
         from mongo_olap_spark.plans.pipeline_compiler import (
-            PipelineError,
-            cube_spec_from_pipeline,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
+            routed_requests_from_pipeline,
         )
 
         wl = []
         for entry in workload:
             source_name, pipeline, *rest = entry
             weight = rest[0] if rest else 1.0
-            try:
-                shape = cube_spec_from_pipeline("__advise", source_name, pipeline)
-                req = AggregateRequest(
-                    source=source_name,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in shape.dimensions
-                    ),
-                    measures=tuple(
-                        (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                        for m in shape.measures
-                    ),
-                    filter_sql=shape.filter_sql,
-                )
-            except PipelineError as cube_err:
-                # the same last-mile translation query_pipeline uses:
-                # special-family pipelines advise the two-level shape
-                # they would be SERVED from (advisor._signature
-                # decomposes the special measure into raw dim + count)
-                try:
-                    filter_sql, dims, measure, _post = (
-                        special_request_from_pipeline(pipeline))
-                except PipelineError:
-                    # mixed-family pipelines (r11) advise once per
-                    # decomposed part, each at the pipeline's weight —
-                    # exactly the requests the serving side will issue
-                    try:
-                        filter_sql, dims, parts, _out = (
-                            mixed_requests_from_pipeline(pipeline))
-                    except PipelineError:
-                        raise cube_err from None
-                    gb = tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    )
-                    for part in parts:
-                        measures = part[1] if part[0] == "plain" else (part[1],)
-                        wl.append(WorkloadQuery(AggregateRequest(
-                            source=source_name, group_by=gb,
-                            measures=measures, filter_sql=filter_sql,
-                        ), weight=weight))
-                    continue
-                req = AggregateRequest(
-                    source=source_name,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    ),
-                    measures=(measure,),
-                    filter_sql=filter_sql,
-                )
-            wl.append(WorkloadQuery(req, weight=weight))
+            filter_sql, dims, parts, _out = routed_requests_from_pipeline(pipeline)
+            wl.extend(
+                WorkloadQuery(_part_request(source_name, filter_sql, dims, part),
+                              weight=weight)
+                for part in parts
+            )
         advice = advise(
             wl, sources,
             cell_budget=cell_budget, sample_fraction=sample_fraction,
@@ -514,138 +463,16 @@ class OlapEngine:
         """
         from mongo_olap_spark.plans.pipeline_compiler import (
             PipelineError,
-            cube_spec_from_pipeline,
             describe_lookup,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
+            routed_requests_from_pipeline,
         )
 
         refusals: list[str] = []
-        routable, rewrite_kind = _routable_rewrite(pipeline)
+        hybrid = ("pass tail= to query() to merge unabsorbed source rows "
+                  "with the cube cells")
         try:
-            special_note = None
-            mixed_route = None
-            try:
-                shape = cube_spec_from_pipeline("__explain", source, routable)
-                req = AggregateRequest(
-                    source=source,
-                    group_by=tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in shape.dimensions
-                    ),
-                    measures=tuple(
-                        (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                        for m in shape.measures
-                    ),
-                    filter_sql=shape.filter_sql,
-                )
-            except PipelineError:
-                try:
-                    # single-accumulator special families (C19–C24, r10)
-                    filter_sql, dims, measure, post = (
-                        special_request_from_pipeline(routable))
-                    req = AggregateRequest(
-                        source=source,
-                        group_by=tuple(
-                            (d.source_path, d.granularity) if d.granularity
-                            else d.source_path
-                            for d in dims
-                        ),
-                        measures=(measure,),
-                        filter_sql=filter_sql,
-                    )
-                    special_note = (
-                        f"special-family aggregate → ({measure[0]!r}, "
-                        f"{measure[1]!r}, ...) exact two-level route"
-                        + (f"; post-transform: {post}" if post else "")
-                    )
-                except PipelineError:
-                    # mixed-family aggregate (r11): route each
-                    # decomposed part independently, report per-part
-                    filter_sql, dims, parts, out_cols = (
-                        mixed_requests_from_pipeline(routable))
-                    gb = tuple(
-                        (d.source_path, d.granularity) if d.granularity
-                        else d.source_path
-                        for d in dims
-                    )
-                    part_infos = []
-                    for part in parts:
-                        measures = part[1] if part[0] == "plain" else (part[1],)
-                        preq = AggregateRequest(
-                            source=source, group_by=gb, measures=measures,
-                            filter_sql=filter_sql,
-                        )
-                        d = self.router.route(preq)
-                        part_infos.append({
-                            "family": part[0] if part[0] == "plain"
-                                      else part[1][1],
-                            "measures": [
-                                m[0] for m in
-                                (part[1] if part[0] == "plain" else (part[1],))
-                            ],
-                            "cube": d.cube,
-                            "reason": d.reason,
-                        })
-                        if d.cube is None:
-                            refusals.append(
-                                f"router[{part_infos[-1]['family']}]: "
-                                f"{d.reason}")
-                    all_cube = all(p["cube"] is not None for p in part_infos)
-                    mixed_route = {
-                        "target": "cube" if all_cube else "source",
-                        # top-level `cube` names the single serving
-                        # cube only when ALL parts share one; parts
-                        # served by different cubes leave it None —
-                        # `cubes` lists every distinct serving cube
-                        # and `parts` is authoritative per part
-                        # (ADVICE r11: consumers keying on `cube`
-                        # alone misread a fully-routed mixed query
-                        # as unrouted).
-                        "cube": (part_infos[0]["cube"]
-                                 if len({p["cube"] for p in part_infos}) == 1
-                                 else None),
-                        "cubes": sorted({
-                            p["cube"] for p in part_infos
-                            if p["cube"] is not None}),
-                        "reason": (
-                            "mixed-family aggregate: every part cube-served"
-                            if all_cube else
-                            "mixed-family aggregate: some parts fall back "
-                            "to source aggregation"),
-                        "pushed_filter": filter_sql,
-                        "rewritten_group_by": [d.name for d in dims],
-                        "parts": part_infos,
-                        "rewrite": (
-                            f"mixed aggregate → {len(part_infos)} routed "
-                            "family parts joined on the group keys; output "
-                            f"columns {out_cols}"),
-                        "hybrid": "pass tail= to query() to merge unabsorbed "
-                                  "source rows with the cube cells",
-                    }
-            if mixed_route is not None:
-                route = mixed_route
-            else:
-                decision = self.router.route(req)
-                route = {
-                    "target": "cube" if decision.cube is not None else "source",
-                    "cube": decision.cube,
-                    "reason": decision.reason,
-                    "pushed_filter": req.filter_sql,
-                    "rewritten_group_by": list(decision.rewritten_group_by),
-                    "hybrid": "pass tail= to query() to merge unabsorbed "
-                              "source rows with the cube cells",
-                }
-                if special_note is not None:
-                    route["rewrite"] = special_note
-                if rewrite_kind is not None:
-                    route["rewrite"] = (
-                        f"trailing ${rewrite_kind} rewritten into its $group "
-                        "definition for routing"
-                    )
-                if decision.cube is None:
-                    refusals.append(f"router: {decision.reason}")
+            filter_sql, dims, parts, out_cols = (
+                routed_requests_from_pipeline(pipeline))
         except PipelineError as e:
             route = {
                 "target": "source",
@@ -654,6 +481,80 @@ class OlapEngine:
                 "pushed_filter": None,
             }
             refusals.append(f"cube routing: {e}")
+        else:
+            decisions = [
+                self.router.route(_part_request(source, filter_sql, dims, part))
+                for part in parts
+            ]
+            if len(parts) == 1:
+                [part], [decision] = parts, decisions
+                route = {
+                    "target": "cube" if decision.cube is not None else "source",
+                    "cube": decision.cube,
+                    "reason": decision.reason,
+                    "pushed_filter": filter_sql,
+                    "rewritten_group_by": list(decision.rewritten_group_by),
+                    "hybrid": hybrid,
+                }
+                tail = _rewritten_tail(pipeline)
+                if tail is not None:
+                    route["rewrite"] = (
+                        f"trailing {tail} rewritten into its $group "
+                        "definition for routing"
+                    )
+                elif part[0] == "special":
+                    _, measure, post = part
+                    route["rewrite"] = (
+                        f"special-family aggregate → ({measure[0]!r}, "
+                        f"{measure[1]!r}, ...) exact two-level route"
+                        + (f"; post-transform: {post}" if post else "")
+                    )
+                if decision.cube is None:
+                    refusals.append(f"router: {decision.reason}")
+            else:
+                # mixed-family aggregate (r11): each part routes
+                # independently, reported per part
+                part_infos = []
+                for part, d in zip(parts, decisions):
+                    family = part[0] if part[0] == "plain" else part[1][1]
+                    part_infos.append({
+                        "family": family,
+                        "measures": [m[0] for m in _part_measures(part)],
+                        "cube": d.cube,
+                        "reason": d.reason,
+                    })
+                    if d.cube is None:
+                        refusals.append(f"router[{family}]: {d.reason}")
+                all_cube = all(p["cube"] is not None for p in part_infos)
+                route = {
+                    "target": "cube" if all_cube else "source",
+                    # top-level `cube` names the single serving cube
+                    # only when ALL parts share one; parts served by
+                    # different cubes leave it None — `cubes` lists
+                    # every distinct serving cube and `parts` is
+                    # authoritative per part (ADVICE r11: consumers
+                    # keying on `cube` alone misread a fully-routed
+                    # mixed query as unrouted).
+                    "cube": (part_infos[0]["cube"]
+                             if len({p["cube"] for p in part_infos}) == 1
+                             else None),
+                    "cubes": sorted({
+                        p["cube"] for p in part_infos
+                        if p["cube"] is not None}),
+                    "reason": (
+                        "mixed-family aggregate: every part cube-served"
+                        if all_cube else
+                        "mixed-family aggregate: some parts fall back "
+                        "to source aggregation"),
+                    "pushed_filter": filter_sql,
+                    "rewritten_group_by": [d.name for d in dims],
+                    "parts": part_infos,
+                    "rewrite": (
+                        f"mixed aggregate → {len(part_infos)} routed "
+                        "family parts joined on the group keys; output "
+                        f"columns {out_cols}"),
+                    "hybrid": hybrid,
+                }
         stages = []
         for st in pipeline:
             name = next(iter(st))
@@ -715,172 +616,45 @@ class OlapEngine:
         source_df: DataFrame | None = None,
     ) -> DataFrame:
         """Serve a Mongo aggregation pipeline — the reference's full
-        loop: a routable ``[$match?, $group]`` aggregate is answered
-        from the smallest sufficient cube (metadata-only routing, zero
-        source scan); anything else compiles directly over
-        ``source_df``. Output columns carry the pipeline's own dim and
-        accumulator names either way."""
-        from mongo_olap_spark.plans.pipeline_compiler import (
-            PipelineError,
-            compile_pipeline,
-            cube_spec_from_pipeline,
-            mixed_requests_from_pipeline,
-            special_request_from_pipeline,
-        )
+        loop: a routable aggregate (``routed_requests_from_pipeline``)
+        is answered from the smallest sufficient cube (metadata-only
+        routing, zero source scan); anything else compiles directly
+        over ``source_df``. Output columns carry the pipeline's own dim
+        and accumulator names either way.
 
-        # $sortByCount IS [$group {_id, count}, $sort {count: -1}] —
-        # rewrite a trailing one into the routable named-dim form so a
-        # count cube answers it metadata-only (r6); the sort re-applies
-        # on the routed (tiny) result
-        routable, kind = _routable_rewrite(pipeline)
-        sort_by_count = kind == "sortByCount"
-        count_alias = pipeline[-1]["$count"] if kind == "count" else None
-        try:
-            shape = cube_spec_from_pipeline("q", source, routable)
-        except PipelineError as cube_err:
-            # not a plain count/sum/avg/min/max/stddev aggregate — the
-            # single-accumulator special families (C19–C24) route
-            # through their own request vocabulary (r10)
-            try:
-                special = special_request_from_pipeline(routable)
-            except PipelineError:
-                # a $group MIXING families — plain + special, or
-                # several specials — decomposes into per-family routed
-                # requests joined on the group keys (r11)
-                try:
-                    mixed = mixed_requests_from_pipeline(routable)
-                except PipelineError:
-                    if source_df is None:
-                        raise cube_err from None
-                    return compile_pipeline(source_df, pipeline)
-                return self._query_mixed_pipeline(mixed, source, source_df)
-            return self._query_special_pipeline(special, source, source_df)
-        pipeline = routable
-        req = AggregateRequest(
-            source=source,
-            group_by=tuple(
-                (d.source_path, d.granularity) if d.granularity else d.source_path
-                for d in shape.dimensions
-            ),
-            measures=tuple(
-                (m.name, m.op, m.path) if m.path else (m.name, m.op)
-                for m in shape.measures
-            ),
-            filter_sql=shape.filter_sql,
-        )
-        decision = self.router.route(req)  # metadata-only
-        out = self.router.execute(req, source_df=source_df)
-        if decision.cube is not None:
-            cur = [
-                g if isinstance(g, str) else g[0]
-                for g in decision.rewritten_group_by
-            ]
-        else:
-            cur = [
-                g if isinstance(g, str) else f"{g[0]}_{g[1]}" for g in req.group_by
-            ]
-        for old, new in zip(cur, [d.name for d in shape.dimensions]):
-            if old != new:
-                out = out.withColumnRenamed(old, new)
-        if sort_by_count:
-            out = out.withColumnRenamed("__sbc", "_id").orderBy(
-                F.desc("count"), "_id"
-            )
-        elif count_alias is not None:
-            # Mongo $count emits {alias: N} — and NO document at all
-            # over empty input (the zero-dim group has no row to count)
-            out = out.select(F.col("__cnt").alias(count_alias))
-        return out
-
-    def _query_special_pipeline(
-        self,
-        special: tuple,
-        source: str,
-        source_df: DataFrame | None,
-    ) -> DataFrame:
-        """Serve a special-family aggregate pipeline ($median /
-        $percentile / $minN / $maxN / $topN / $bottomN /
-        $addToSet+$size) through the router's C19–C24 vocabulary —
-        metadata-only when an exact two-level cube covers it, else the
-        router's own two-level source fallback (SAME rollup either
-        way, so the answer never depends on cube presence)."""
-        filter_sql, dims, measure, post = special
-        req = AggregateRequest(
-            source=source,
-            group_by=tuple(
-                (d.source_path, d.granularity) if d.granularity else d.source_path
-                for d in dims
-            ),
-            measures=(measure,),
-            filter_sql=filter_sql,
-        )
-        decision = self.router.route(req)  # metadata-only
-        out = self.router.execute(req, source_df=source_df)
-        if decision.cube is not None:
-            cur = [
-                g if isinstance(g, str) else g[0]
-                for g in decision.rewritten_group_by
-            ]
-        else:
-            cur = [
-                g if isinstance(g, str) else f"{g[0]}_{g[1]}" for g in req.group_by
-            ]
-        for old, new in zip(cur, [d.name for d in dims]):
-            if old != new:
-                out = out.withColumnRenamed(old, new)
-        alias = measure[0]
-        if post == "array_wrap":
-            # $percentile emits an array even for a single p
-            out = out.withColumn(alias, F.array(F.col(alias)))
-        return out
-
-    def _query_mixed_pipeline(
-        self,
-        mixed: tuple,
-        source: str,
-        source_df: DataFrame | None,
-    ) -> DataFrame:
-        """Serve a mixed-family aggregate pipeline — a $group combining
-        plain accumulators with special exact families, or several
-        specials — by routing EACH family part independently
-        (different parts may be answered by different cubes, one
-        shared two-level cube, or the router's source fallback) and
-        joining the one-row-per-group part frames on the group keys
-        (r11, VERDICT r10 task 1).
-
-        Answer-consistency note: every part goes through
-        ``router.execute`` whether a cube serves it or not — the
-        routed and source-fallback paths share the same rollup per
-        family, so the answer never depends on cube presence. (A
+        Each parsed part (all plain accumulators in one; each special
+        family alone) routes and executes independently — different
+        parts may be answered by different cubes, one shared two-level
+        cube, or the router's source fallback — and several parts are
+        full-outer joined on the group keys (null-safe; every part
+        emits one row per group). Every part goes through
+        ``router.execute`` whether a cube serves it or not: the routed
+        and source-fallback paths share the same rollup per family, so
+        the answer never depends on cube presence. (A
         ``compile_pipeline`` fallback would NOT be bit-identical: the
         compiled $group $median is Spark's interpolated ``median``,
         while the routed family serves the exact type-1 discrete
-        quantile.) The cost of a fully-unrouted mixed aggregate is one
-        source aggregation per family — create the advised cubes, or
-        call ``compile_pipeline`` directly, if single-pass Mongo
-        semantics are wanted instead.
-
-        Scale: the join keys are the GROUP KEYS of already-aggregated
-        frames — output-sized inputs, not source-sized; AQE broadcasts
-        the small sides. Null group keys join null-safe (Mongo groups
-        null/missing keys as a real group).
+        quantile.) A fully-unrouted mixed aggregate costs one source
+        aggregation per family; the join inputs are output-sized
+        aggregate frames, not source-sized.
         """
-        filter_sql, dims, parts, out_cols = mixed
-        gb = tuple(
-            (d.source_path, d.granularity) if d.granularity else d.source_path
-            for d in dims
+        from mongo_olap_spark.plans.pipeline_compiler import (
+            PipelineError,
+            compile_pipeline,
+            routed_requests_from_pipeline,
         )
+
+        try:
+            filter_sql, dims, parts, out_cols = (
+                routed_requests_from_pipeline(pipeline))
+        except PipelineError:
+            if source_df is None:
+                raise
+            return compile_pipeline(source_df, pipeline)
         dim_names = [d.name for d in dims]
         frames = []
         for part in parts:
-            if part[0] == "plain":
-                measures, post = part[1], None
-            else:
-                measures, post = (part[1],), part[2]
-            req = AggregateRequest(
-                source=source, group_by=gb, measures=measures,
-                filter_sql=filter_sql,
-            )
+            req = _part_request(source, filter_sql, dims, part)
             decision = self.router.route(req)  # metadata-only
             out = self.router.execute(req, source_df=source_df)
             if decision.cube is not None:
@@ -896,14 +670,27 @@ class OlapEngine:
             for old, new in zip(cur, dim_names):
                 if old != new:
                     out = out.withColumnRenamed(old, new)
-            if post == "array_wrap":
+            if part[0] == "special" and part[2] == "array_wrap":
+                # $percentile emits an array even for a single p
                 alias = part[1][0]
                 out = out.withColumn(alias, F.array(F.col(alias)))
             frames.append(out)
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = _join_on_group_keys(merged, f, dim_names)
-        return merged.select(*dim_names, *out_cols)
+        out = frames[0]
+        if len(frames) > 1:
+            for f in frames[1:]:
+                out = _join_on_group_keys(out, f, dim_names)
+            out = out.select(*dim_names, *out_cols)
+        tail = _rewritten_tail(pipeline)
+        if tail == "$sortByCount":
+            out = out.withColumnRenamed("__sbc", "_id").orderBy(
+                F.desc("count"), "_id"
+            )
+        elif tail == "$count":
+            # Mongo $count emits {alias: N} — and NO document at all
+            # over empty input (the zero-dim rollup still emits a 0 row)
+            out = out.where(F.col("__cnt") > 0).select(
+                F.col("__cnt").alias(pipeline[-1]["$count"]))
+        return out
 
 
 def _join_on_group_keys(
@@ -934,26 +721,30 @@ def _join_on_group_keys(
     return joined.select(*sel)
 
 
-def _routable_rewrite(pipeline: list) -> tuple[list, str | None]:
-    """Rewrite trailing $sortByCount / $count into their $group
-    definitions so the router can serve them from cubes (r6).
+def _part_measures(part: tuple) -> tuple:
+    """The measures of one parsed request part: all plain measures, or
+    the special family's single measure."""
+    return part[1] if part[0] == "plain" else (part[1],)
 
-    $sortByCount IS [$group {_id, count}, $sort {count: -1}];
-    $count IS the zero-dimension rollup (summed count partials).
-    Returns (routable_pipeline, kind) with kind in
-    {"sortByCount", "count", None}.
-    """
-    if (pipeline and list(pipeline[-1]) == ["$sortByCount"]
-            and isinstance(pipeline[-1]["$sortByCount"], str)
-            and pipeline[-1]["$sortByCount"].startswith("$")):
-        return pipeline[:-1] + [{"$group": {
-            "_id": {"__sbc": pipeline[-1]["$sortByCount"]},
-            "count": {"$sum": 1},
-        }}], "sortByCount"
-    if (pipeline and list(pipeline[-1]) == ["$count"]
-            and isinstance(pipeline[-1]["$count"], str)
-            and pipeline[-1]["$count"]):
-        return pipeline[:-1] + [{"$group": {
-            "_id": {}, "__cnt": {"$sum": 1},
-        }}], "count"
-    return pipeline, None
+
+def _part_request(source: str, filter_sql: str | None, dims: list,
+                  part: tuple) -> AggregateRequest:
+    """The router request one parsed part issues over the shared group
+    keys and pushed filter."""
+    return AggregateRequest(
+        source=source,
+        group_by=tuple(
+            (d.source_path, d.granularity) if d.granularity else d.source_path
+            for d in dims
+        ),
+        measures=_part_measures(part),
+        filter_sql=filter_sql,
+    )
+
+
+def _rewritten_tail(pipeline: list) -> str | None:
+    """The trailing ``$sortByCount``/``$count`` of a pipeline the parser
+    accepted — rewritten into its $group for routing, so its sort /
+    alias still has to be presented on the routed answer."""
+    stage = next(iter(pipeline[-1]))
+    return stage if stage in ("$sortByCount", "$count") else None

@@ -4507,15 +4507,40 @@ def _cube_dims(id_spec) -> list:
     return dims
 
 
+#: plain $group accumulators → router measure ops (the retractable
+#: families a plain cube materializes); a literal ``$sum`` is the count
+_PLAIN_ACC_OPS = {
+    "$sum": "sum", "$avg": "avg", "$min": "min", "$max": "max",
+    "$stdDevPop": "stddev_pop", "$stdDevSamp": "stddev_samp",
+}
+
+
+def _plain_acc_measure(gname: str, op: str, arg) -> tuple:
+    """Translate ONE plain $group accumulator (``op`` in
+    ``_PLAIN_ACC_OPS``) into the router's measure tuple ``(name, op[,
+    path])`` — shared by :func:`cube_spec_from_pipeline` and
+    :func:`routed_requests_from_pipeline`. Only ``{$sum: 1}`` is a
+    count: any other literal refuses (``{$sum: 2}`` served as a count
+    would be a silent wrong answer; the compiler sums the literal)."""
+    if op == "$sum" and isinstance(arg, (int, float)) and not isinstance(arg, bool):
+        if arg != 1:
+            raise PipelineError("routable literal $sum must be {$sum: 1} (count)")
+        return (gname, "count")
+    if not (isinstance(arg, str) and arg.startswith("$")):
+        raise PipelineError(f"accumulator {op} needs a field path")
+    return (gname, _PLAIN_ACC_OPS[op], arg[1:])
+
+
 def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
     """Translate a ``[$match?, $group]`` pipeline into a CubeSpec.
 
     ``_id`` must be a document ``{dim: "$path" | {"$dateTrunc": ...}}``
     (named dimensions — the cube needs stable dim names); accumulators
-    map $sum:1→count, $sum→sum, $avg→avg, $min/$max→min/max, and (r10)
-    $stdDevPop/$stdDevSamp→the dispersion family's decomposed
-    (Σx, Σx², n) measures — retractable and family-bound at routing
-    time (any stored dispersion form answers any requested form).
+    map $sum:1→count (any other literal $sum refuses), $sum→sum,
+    $avg→avg, $min/$max→min/max, and (r10) $stdDevPop/$stdDevSamp→the
+    dispersion family's decomposed (Σx, Σx², n) measures — retractable
+    and family-bound at routing time (any stored dispersion form
+    answers any requested form).
     """
     from mongo_olap_spark.cube.spec import CubeSpec, Measure
 
@@ -4530,21 +4555,10 @@ def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
         if mname == "_id":
             continue
         [(op, arg)] = mspec.items()
-        if op == "$sum" and isinstance(arg, (int, float)) and not isinstance(arg, bool):
-            measures.append(Measure(mname, "count"))
-        elif op in ("$sum", "$avg", "$min", "$max"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            measures.append(Measure(mname, op[1:], path=arg[1:]))
-        elif op in ("$stdDevPop", "$stdDevSamp"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            measures.append(Measure(
-                mname, "stddev_pop" if op == "$stdDevPop" else "stddev_samp",
-                path=arg[1:],
-            ))
-        else:
+        if op not in _PLAIN_ACC_OPS:
             raise PipelineError(f"unsupported cube accumulator {op!r}")
+        # (name, op[, path]) is Measure's leading field order
+        measures.append(Measure(*_plain_acc_measure(mname, op, arg)))
 
     return CubeSpec(
         name=name, source=source,
@@ -4553,116 +4567,12 @@ def cube_spec_from_pipeline(name: str, source: str, pipeline: list[dict]):
     )
 
 
-def special_request_from_pipeline(
-    pipeline: list[dict],
-) -> tuple[str | None, list, tuple, str | None]:
-    """Parse an aggregate pipeline whose single accumulator is one of
-    the exact special families (C19–C24) into the router's request
-    vocabulary — the last mile of pipeline-level routing (VERDICT r9
-    task 1): without this, a ``$median``/``$percentile``/``$minN``/
-    ``$maxN``/``$topN``/``$bottomN``/``$addToSet``+``$size`` pipeline
-    silently fell back to a full source compile even when a two-level
-    cube could answer it metadata-only.
-
-    Recognized shapes (everything else raises PipelineError so the
-    caller keeps its compile fallback):
-
-    - ``[$match?, $group {_id, out: {$median: {input: "$p"}}}]``
-      → ``(out, "quantile_exact", p, 0.5)``
-    - ``[$match?, $group {_id, out: {$percentile: {input, p: [q]}}}]``
-      (single q) → ``(out, "quantile_exact", p, q)`` + array_wrap post;
-      multi-p (r10) → ``(out, "quantile_exact", p, (q1, q2, …))`` —
-      quantile_rollup answers every p from ONE window pass, emitting
-      the array in p order (already Mongo's output shape)
-    - ``[$match?, $group {_id, out: {$minN|$maxN: {input, n}}}]``
-      → ``(out, "min_n"|"max_n", p, n)``
-    - ``[$match?, $group {_id, out: {$topN|$bottomN: {n, sortBy:
-      {s: ±1}, output: "$p"}}}]`` → ``(out, "top_by"|"bottom_by", s,
-      p, n[, present_desc])``; a DESCENDING sortBy swaps the selection
-      op and sets the present_desc flag (Mongo presents in sortBy
-      order)
-    - ``[$match?, $group {_id, tmp: {$addToSet: "$p"}},
-      $project {out: {$size: "$tmp"}}]`` → ``(out, "count_distinct",
-      p)`` — the Mongo idiom for exact count-distinct
-
-    Returns ``(filter_sql, dims, measure_tuple, post)`` where ``post``
-    is an output transform tag: None | "array_wrap" (desc $topN/
-    $bottomN presentation rides INSIDE the measure tuple as the
-    present_desc flag, not as a post transform).
-
-    Semantics note: the quantile families answer with the engine's
-    exact type-1 discrete quantile (an actual data value) — Mongo's
-    own $median/$percentile are t-digest approximations, so exactness
-    here is a strict upgrade, and the ROUTED and source-FALLBACK paths
-    share the same rollup (router.execute builds the identical
-    two-level shape ad hoc), so answers never depend on cube presence.
-    """
-    tail_project: dict | None = None
-    body = pipeline
-    if len(pipeline) >= 2 and list(pipeline[-1]) == ["$project"]:
-        tail_project = pipeline[-1]["$project"]
-        body = pipeline[:-1]
-    filter_sql, group = _cube_pipeline_prefix(body, what="special aggregate")
-    dims = _cube_dims(group.get("_id"))
-    dim_names = {d.name for d in dims}
-    accs = {k: v for k, v in group.items() if k != "_id"}
-    if len(accs) != 1:
-        raise PipelineError(
-            "special-family routing needs exactly one accumulator "
-            f"(got {sorted(accs) or 'none'})"
-        )
-    [(gname, mspec)] = accs.items()
-    if not (isinstance(mspec, dict) and len(mspec) == 1):
-        raise PipelineError(f"accumulator for {gname!r} must be a single-op document")
-    [(op, arg)] = mspec.items()
-
-    def field_path(v, what):
-        if not (isinstance(v, str) and v.startswith("$")):
-            raise PipelineError(f"{op} {what} must be a field path")
-        return v[1:]
-
-    if tail_project is None and op != "$addToSet":
-        measure, post = _special_acc_measure(gname, op, arg)
-        if gname in dim_names:
-            raise PipelineError(f"output {gname!r} collides with a dimension")
-        return filter_sql, dims, measure, post
-    if tail_project is not None:
-        # only the $addToSet+$size idiom carries a trailing $project
-        if op != "$addToSet":
-            raise PipelineError(
-                "trailing $project is only routable over $addToSet (+$size)"
-            )
-        path = field_path(arg, "argument")
-        proj = {k: v for k, v in tail_project.items()
-                if not (k == "_id" and v in (1, True))}
-        sizes = [
-            (k, v) for k, v in proj.items()
-            if isinstance(v, dict) and list(v) == ["$size"]
-        ]
-        if len(sizes) != 1 or len(proj) != len(sizes):
-            raise PipelineError(
-                "count-distinct routing needs $project {out: {$size: "
-                "'$<set field>'}} (plus _id passthrough) and nothing else"
-            )
-        out_name, size_spec = sizes[0]
-        if size_spec["$size"] != f"${gname}":
-            raise PipelineError(
-                f"$size must reference the $addToSet field ${gname}"
-            )
-        if out_name in dim_names:
-            raise PipelineError(f"output {out_name!r} collides with a dimension")
-        return filter_sql, dims, (out_name, "count_distinct", path), None
-    raise PipelineError(f"accumulator {op!r} is not special-family routable")
-
-
 def _special_acc_measure(gname: str, op: str, arg) -> tuple[tuple, str | None]:
     """Translate ONE special-family $group accumulator into the
     router's measure-tuple vocabulary: ``(measure, post)`` where
-    ``post`` is None | "array_wrap". Shared by the single-accumulator
-    parse (:func:`special_request_from_pipeline`) and the
-    mixed-accumulator decomposition (:func:`mixed_requests_from_pipeline`,
-    r11). The $addToSet+$size idiom is NOT handled here — it needs the
-    trailing $project, parsed by the callers."""
+    ``post`` is None | "array_wrap" (see
+    :func:`routed_requests_from_pipeline`). The $addToSet+$size idiom
+    is NOT handled here — it needs the trailing $project."""
 
     def field_path(v, what):
         if not (isinstance(v, str) and v.startswith("$")):
@@ -4742,68 +4652,113 @@ def _special_acc_measure(gname: str, op: str, arg) -> tuple[tuple, str | None]:
     raise PipelineError(f"accumulator {op!r} is not special-family routable")
 
 
-def mixed_requests_from_pipeline(
+def _routable_rewrite(pipeline: list) -> list:
+    """Rewrite a trailing $sortByCount / $count into its $group
+    definition so the router can serve it from cubes (r6).
+
+    $sortByCount IS [$group {_id, count}, $sort {count: -1}] (the
+    named dim is ``__sbc``); $count IS the zero-dimension rollup
+    (summed count partials, measure ``__cnt``). The caller re-applies
+    the sort / the alias on the routed (tiny) result.
+    """
+    if (pipeline and list(pipeline[-1]) == ["$sortByCount"]
+            and isinstance(pipeline[-1]["$sortByCount"], str)
+            and pipeline[-1]["$sortByCount"].startswith("$")):
+        return pipeline[:-1] + [{"$group": {
+            "_id": {"__sbc": pipeline[-1]["$sortByCount"]},
+            "count": {"$sum": 1},
+        }}]
+    if (pipeline and list(pipeline[-1]) == ["$count"]
+            and isinstance(pipeline[-1]["$count"], str)
+            and pipeline[-1]["$count"]):
+        return pipeline[:-1] + [{"$group": {
+            "_id": {}, "__cnt": {"$sum": 1},
+        }}]
+    return pipeline
+
+
+def routed_requests_from_pipeline(
     pipeline: list[dict],
 ) -> tuple[str | None, list, list, list[str]]:
-    """Parse a ``[$match?, $group[, $project]]`` aggregate whose
-    ``$group`` MIXES accumulator families — plain (count/sum/avg/min/
-    max/stddev) together with one-or-more exact special families
-    ($median / $percentile / $minN / $maxN / $topN / $bottomN /
-    $addToSet+$size), or several specials on one group — into
-    per-family routed request parts sharing the group keys (VERDICT
-    r10 task 1: this shape previously fell back to a full source
-    compile even when one two-level cube could answer every family).
+    """Parse a routable aggregate — ``[$match?, $group[, $project]]``,
+    or a pipeline ending in ``$sortByCount``/``$count`` (rewritten into
+    its ``$group`` definition first, :func:`_routable_rewrite`) — into
+    the router's request vocabulary. This is the ONE translation
+    ``OlapEngine.query_pipeline``, ``explain`` and ``advise_cubes``
+    share.
 
     Returns ``(filter_sql, dims, parts, out_cols)``:
 
     - ``parts``: request parts, each ``("plain", measures_tuple)``
-      (ALL plain accumulators ride in ONE request — one rollup) or
-      ``("special", measure_tuple, post)`` (each special family is its
-      own single-measure request: the two-level rollups aggregate the
-      qualifying-cell *slice*, so they cannot share a request with
-      measures that aggregate all cells).
+      (ALL plain accumulators — count/sum/avg/min/max/stddev — ride in
+      ONE request, one rollup) or ``("special", measure_tuple, post)``
+      (each special family is its own single-measure request: the
+      two-level rollups aggregate the qualifying-cell *slice*, so they
+      cannot share a request with measures that aggregate all cells).
+      A plain-only ``$group`` is one plain part; a lone special
+      accumulator is one special part; a ``$group`` mixing families
+      (r11) is one part per family, joined on the group keys by the
+      serving side.
     - ``out_cols``: final output accumulator names in presentation
       order (the $group's order, or the trailing $project's).
 
-    The serving side (``OlapEngine._query_mixed_pipeline``) routes
-    each part independently — different parts may be answered by
-    different cubes, one shared two-level cube, or the router's source
-    fallback — and joins the per-part frames on the group keys
-    (null-safe; every part emits one row per group).
+    Plain accumulators translate as in :func:`cube_spec_from_pipeline`
+    (only ``{$sum: 1}`` is a count). Special families translate as:
 
-    The trailing ``$project`` is recognized only in the Mongo
-    count-distinct idiom: ``{out: {$size: "$<$addToSet field>"}}``
-    entries plus ``1``/``true`` passthroughs of other accumulator
-    names (``_id`` must not be excluded — the group keys are the join
-    keys). Accumulators dropped by an inclusion projection are not
+    - ``{$median: {input: "$p"}}`` → ``(out, "quantile_exact", p, 0.5)``
+    - ``{$percentile: {input, p: [q]}}`` (single q) → ``(out,
+      "quantile_exact", p, q)`` + array_wrap post; multi-p (r10) →
+      ``(out, "quantile_exact", p, (q1, q2, …))`` — quantile_rollup
+      answers every p from ONE window pass, emitting the array in p
+      order (already Mongo's output shape)
+    - ``{$minN|$maxN: {input, n}}`` → ``(out, "min_n"|"max_n", p, n)``
+    - ``{$topN|$bottomN: {n, sortBy: {s: ±1}, output: "$p"}}`` →
+      ``(out, "top_by"|"bottom_by", s, p, n[, present_desc])``; a
+      DESCENDING sortBy swaps the selection op and sets the
+      present_desc flag (Mongo presents in sortBy order)
+    - ``{tmp: {$addToSet: "$p"}}`` + ``$project {out: {$size:
+      "$tmp"}}`` → ``(out, "count_distinct", p)`` — the Mongo idiom
+      for exact count-distinct.
+
+    The trailing ``$project`` is recognized only in that idiom:
+    ``{out: {$size: "$<$addToSet field>"}}`` entries plus ``1``/``true``
+    passthroughs of other accumulator names (``_id`` must not be
+    excluded — the group keys are the join keys). A ``$size`` output
+    named like another accumulator replaces it (Mongo inclusion-
+    $project semantics); accumulators the projection drops are not
     computed. A raw ``$addToSet`` that no ``$size`` consumes refuses
     (distinct SETS are not a bounded routable answer).
 
-    Anything else raises :class:`PipelineError` so the caller keeps
-    its compile fallback.
+    ``_id`` must be a ``{dim: expr}`` document; ``_id: null`` (the
+    zero-dim global group) routes only as a lone special accumulator.
+
+    Semantics note: the quantile families answer with the engine's
+    exact type-1 discrete quantile (an actual data value) — Mongo's
+    own $median/$percentile are t-digest approximations, so exactness
+    here is a strict upgrade, and the ROUTED and source-FALLBACK paths
+    share the same rollup (router.execute builds the identical
+    two-level shape ad hoc), so answers never depend on cube presence.
+
+    Anything else raises :class:`PipelineError` so the caller compiles
+    the pipeline instead.
     """
+    pipeline = _routable_rewrite(pipeline)
     tail_project: dict | None = None
     body = pipeline
     if len(pipeline) >= 2 and list(pipeline[-1]) == ["$project"]:
         tail_project = pipeline[-1]["$project"]
         body = pipeline[:-1]
-    filter_sql, group = _cube_pipeline_prefix(body, what="mixed aggregate")
+    filter_sql, group = _cube_pipeline_prefix(body, what="routed aggregate")
     id_spec = group.get("_id")
-    if id_spec is None:
-        raise PipelineError("mixed routing needs a {dim: expr} _id document")
     dims = _cube_dims(id_spec)
     dim_names = {d.name for d in dims}
     accs = {k: v for k, v in group.items() if k != "_id"}
-    if len(accs) < 2:
-        raise PipelineError(
-            "mixed routing needs two or more accumulators (single-"
-            "accumulator aggregates take the cube_spec/special paths)"
-        )
+    if not accs:
+        raise PipelineError("routed aggregate needs at least one accumulator")
     plain: list[tuple] = []
     specials: list[tuple] = []  # (measure_tuple, post)
     sets: dict[str, str] = {}   # $addToSet accumulators: name -> path
     order: list[str] = []       # $group accumulator order
-    n_special = 0
     for gname, mspec in accs.items():
         if gname in dim_names:
             raise PipelineError(
@@ -4818,33 +4773,14 @@ def mixed_requests_from_pipeline(
                 raise PipelineError(
                     "routable $addToSet needs a field-path argument")
             sets[gname] = arg[1:]
-            n_special += 1
-        elif (op == "$sum" and isinstance(arg, (int, float))
-                and not isinstance(arg, bool)):
-            if arg != 1:
-                raise PipelineError(
-                    "routable literal $sum must be {$sum: 1} (count)")
-            plain.append((gname, "count"))
-        elif op in ("$sum", "$avg", "$min", "$max"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            plain.append((gname, op[1:], arg[1:]))
-        elif op in ("$stdDevPop", "$stdDevSamp"):
-            if not (isinstance(arg, str) and arg.startswith("$")):
-                raise PipelineError(f"accumulator {op} needs a field path")
-            plain.append((
-                gname,
-                "stddev_pop" if op == "$stdDevPop" else "stddev_samp",
-                arg[1:],
-            ))
+        elif op in _PLAIN_ACC_OPS:
+            plain.append(_plain_acc_measure(gname, op, arg))
         else:
-            measure, post = _special_acc_measure(gname, op, arg)
-            specials.append((measure, post))
-            n_special += 1
-    if n_special == 0:
+            specials.append(_special_acc_measure(gname, op, arg))
+    if id_spec is None and (len(accs) != 1 or plain):
         raise PipelineError(
-            "no special-family accumulator — plain aggregates route "
-            "via cube_spec_from_pipeline")
+            "_id: null routes only as a lone special accumulator (plain "
+            "and mixed aggregates need a {dim: expr} _id document)")
     if sets and tail_project is None:
         raise PipelineError(
             "$addToSet routes only through the trailing "
@@ -4918,15 +4854,8 @@ def mixed_requests_from_pipeline(
         specials = [(m, p) for (m, p) in specials if m[0] in keep]
     else:
         out_cols = list(order)
-    if len(set(out_cols)) != len(out_cols):
-        raise PipelineError("duplicate output accumulator names")
-    parts: list = []
-    if plain:
-        parts.append(("plain", tuple(plain)))
-    for measure, post in specials:
-        parts.append(("special", measure, post))
-    if not parts:
-        raise PipelineError("projection dropped every accumulator")
+    parts: list = [("plain", tuple(plain))] if plain else []
+    parts += [("special", measure, post) for measure, post in specials]
     return filter_sql, dims, parts, out_cols
 
 

@@ -1,12 +1,14 @@
-"""Mixed-family pipeline routing (r11, VERDICT r10 task 1).
+"""Pipeline-level routing through the one parser (r11 mixed families,
+VERDICT r10 task 1).
 
-A $group combining PLAIN accumulators (count/sum/avg/min/max/stddev)
-with one-or-more exact SPECIAL families ($median/$percentile/$minN/
-$maxN/$topN/$bottomN/$addToSet+$size) — or several specials together —
-decomposes into per-family routed requests joined on the group keys:
-mixed_requests_from_pipeline (parse) + OlapEngine._query_mixed_pipeline
-(serve). Routed and source-fallback answers must agree bit-for-bit
-(both go through router.execute, which shares the rollup per family).
+``routed_requests_from_pipeline`` translates every routable aggregate
+into request parts: a plain-only $group is one plain part, a lone
+special accumulator ($median/$percentile/$minN/$maxN/$topN/$bottomN/
+$addToSet+$size) one special part, and a $group MIXING families — or
+several specials — one part per family, joined on the group keys.
+``OlapEngine.query_pipeline`` serves the parts in one loop; routed and
+source-fallback answers must agree bit-for-bit (both go through
+router.execute, which shares the rollup per family).
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ from mongo_olap_spark.cube import CubeSpec, Dimension, Measure
 from mongo_olap_spark.engine import OlapEngine
 from mongo_olap_spark.plans.pipeline_compiler import (
     PipelineError,
-    mixed_requests_from_pipeline,
+    compile_pipeline,
+    routed_requests_from_pipeline,
 )
 
 MIXED = [{"$group": {"_id": {"et": "$event_type"},
@@ -31,7 +34,7 @@ MIXED = [{"$group": {"_id": {"et": "$event_type"},
 # ---------------------------------------------------------------------------
 
 def test_parse_plain_plus_special():
-    filter_sql, dims, parts, out_cols = mixed_requests_from_pipeline(MIXED)
+    filter_sql, dims, parts, out_cols = routed_requests_from_pipeline(MIXED)
     assert filter_sql is None
     assert [d.name for d in dims] == ["et"]
     assert out_cols == ["med", "n", "lo"]
@@ -42,7 +45,7 @@ def test_parse_plain_plus_special():
 
 
 def test_parse_match_prefix_and_two_specials():
-    filter_sql, dims, parts, out_cols = mixed_requests_from_pipeline([
+    filter_sql, dims, parts, out_cols = routed_requests_from_pipeline([
         {"$match": {"value": {"$gt": 10}}},
         {"$group": {"_id": {"et": "$event_type"},
                     "med": {"$median": {"input": "$value"}},
@@ -56,7 +59,7 @@ def test_parse_match_prefix_and_two_specials():
 
 
 def test_parse_addtoset_size_idiom_with_passthrough_and_drop():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = routed_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "users": {"$addToSet": "$user_id"},
                     "n": {"$sum": 1},
@@ -72,48 +75,110 @@ def test_parse_addtoset_size_idiom_with_passthrough_and_drop():
     assert cd[1] == ("nu", "count_distinct", "user_id")
 
 
+# explicit ids keep each case's id stable as the corpus changes
 @pytest.mark.parametrize("pipe,msg", [
-    # single accumulator: not mixed (other paths own it)
-    ([{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}}}}],
-     "two or more accumulators"),
-    # all plain: not mixed (cube_spec path owns it)
-    ([{"$group": {"_id": {"et": "$e"}, "n": {"$sum": 1}, "s": {"$sum": "$v"}}}],
-     "no special-family accumulator"),
     # raw $addToSet without the $size project
-    ([{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
-                  "n": {"$sum": 1}}}],
-     "idiom"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
+                     "n": {"$sum": 1}}}],
+        "idiom", id="pipe2-idiom"),
     # _id excluded in the trailing project
-    ([{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
-                  "n": {"$sum": 1}}},
-      {"$project": {"_id": 0, "nu": {"$size": "$u"}, "n": 1}}],
-     "cannot exclude _id"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
+                     "n": {"$sum": 1}}},
+         {"$project": {"_id": 0, "nu": {"$size": "$u"}, "n": 1}}],
+        "cannot exclude _id", id="pipe3-cannot exclude _id"),
     # $size over a non-set field
-    ([{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
-                  "n": {"$sum": 1}}},
-      {"$project": {"nu": {"$size": "$n"}, "u": {"$size": "$u"}}}],
-     "must reference an \\$addToSet field"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
+                     "n": {"$sum": 1}}},
+         {"$project": {"nu": {"$size": "$n"}, "u": {"$size": "$u"}}}],
+        "must reference an \\$addToSet field",
+        id="pipe4-must reference an \\$addToSet field"),
     # a set consumed twice
-    ([{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
-                  "n": {"$sum": 1}}},
-      {"$project": {"a": {"$size": "$u"}, "b": {"$size": "$u"}}}],
-     "consumed by two"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "u": {"$addToSet": "$v"},
+                     "n": {"$sum": 1}}},
+         {"$project": {"a": {"$size": "$u"}, "b": {"$size": "$u"}}}],
+        "consumed by two", id="pipe5-consumed by two"),
     # literal $sum must be 1
-    ([{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}},
-                  "x": {"$sum": 2}}}],
-     "must be \\{\\$sum: 1\\}"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}},
+                     "x": {"$sum": 2}}}],
+        "must be \\{\\$sum: 1\\}", id="pipe6-must be \\{\\$sum: 1\\}"),
     # unsupported accumulator falls out
-    ([{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}},
-                  "x": {"$push": "$v"}}}],
-     "not special-family routable"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "m": {"$median": {"input": "$v"}},
+                     "x": {"$push": "$v"}}}],
+        "not special-family routable", id="pipe7-not special-family routable"),
     # accumulator name collides with a dimension
-    ([{"$group": {"_id": {"et": "$e"}, "et": {"$median": {"input": "$v"}},
-                  "n": {"$sum": 1}}}],
-     "collides with a dimension"),
+    pytest.param(
+        [{"$group": {"_id": {"et": "$e"}, "et": {"$median": {"input": "$v"}},
+                     "n": {"$sum": 1}}}],
+        "collides with a dimension", id="pipe8-collides with a dimension"),
 ])
 def test_parse_refusals(pipe, msg):
     with pytest.raises(PipelineError, match=msg):
-        mixed_requests_from_pipeline(pipe)
+        routed_requests_from_pipeline(pipe)
+
+
+def _group(**accs):
+    return {"$group": {"_id": {"et": "$event_type"}, **accs}}
+
+
+MED = {"$median": {"input": "$value"}}
+
+#: the parser's accept/refuse decision: (pipeline, family of each
+#: parsed part — "plain" or the special measure op; None = refused)
+DECISIONS = [
+    pytest.param([_group(n={"$sum": 1}, s={"$sum": "$value"},
+                         a={"$avg": "$value"}, lo={"$min": "$value"},
+                         hi={"$max": "$value"}, sd={"$stdDevPop": "$value"},
+                         sds={"$stdDevSamp": "$value"})],
+                 ["plain"], id="plain-several"),
+    pytest.param([_group(med=MED)], ["quantile_exact"], id="median"),
+    pytest.param([_group(p={"$percentile": {"input": "$value", "p": [0.9]}})],
+                 ["quantile_exact"], id="percentile"),
+    pytest.param([_group(lo={"$minN": {"input": "$value", "n": 2}})],
+                 ["min_n"], id="minN"),
+    pytest.param([_group(hi={"$maxN": {"input": "$value", "n": 2}})],
+                 ["max_n"], id="maxN"),
+    pytest.param([_group(t={"$topN": {"n": 2, "sortBy": {"value": 1},
+                                      "output": "$user_id"}})],
+                 ["top_by"], id="topN"),
+    pytest.param([_group(b={"$bottomN": {"n": 2, "sortBy": {"value": 1},
+                                         "output": "$user_id"}})],
+                 ["bottom_by"], id="bottomN"),
+    pytest.param([_group(us={"$addToSet": "$user_id"}),
+                  {"$project": {"nu": {"$size": "$us"}}}],
+                 ["count_distinct"], id="addToSet-size"),
+    pytest.param(MIXED, ["plain", "quantile_exact"], id="mixed"),
+    pytest.param([{"$sortByCount": "$event_type"}], ["plain"],
+                 id="sortByCount"),
+    pytest.param([{"$match": {"value": {"$gt": 5}}}, {"$count": "n"}],
+                 ["plain"], id="count"),
+    pytest.param([{"$group": {"_id": None, "med": MED}}], ["quantile_exact"],
+                 id="id-null-lone-special"),
+    pytest.param([{"$group": {"_id": None, "n": {"$sum": 1},
+                              "s": {"$sum": "$value"}}}],
+                 None, id="id-null-plain"),
+    pytest.param([{"$group": {"_id": None, "med": MED, "n": {"$sum": 1}}}],
+                 None, id="id-null-mixed"),
+    pytest.param([_group(x={"$sum": 2})], None, id="literal-sum-2"),
+    pytest.param([_group()], None, id="no-accumulator"),
+    pytest.param([_group(n={"$sum": 1}), {"$sort": {"n": -1}}], None,
+                 id="trailing-sort"),
+]
+
+
+@pytest.mark.parametrize("pipe,families", DECISIONS)
+def test_routed_parse_decision(pipe, families):
+    if families is None:
+        with pytest.raises(PipelineError):
+            routed_requests_from_pipeline(pipe)
+        return
+    _f, _d, parts, _out = routed_requests_from_pipeline(pipe)
+    assert [p[0] if p[0] == "plain" else p[1][1] for p in parts] == families
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +363,7 @@ def test_advisor_ingests_mixed_and_apply_routes_it(engine, events):
 # ---------------------------------------------------------------------------
 
 def test_parse_size_output_shadows_plain_accumulator():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = routed_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "u": {"$addToSet": "$user_id"},
                     "n": {"$sum": 1}}},
@@ -309,7 +374,7 @@ def test_parse_size_output_shadows_plain_accumulator():
 
 
 def test_parse_size_output_shadows_special_accumulator():
-    _f, _d, parts, out_cols = mixed_requests_from_pipeline([
+    _f, _d, parts, out_cols = routed_requests_from_pipeline([
         {"$group": {"_id": {"et": "$event_type"},
                     "u": {"$addToSet": "$user_id"},
                     "med": {"$median": {"input": "$value"}},
@@ -386,7 +451,7 @@ def test_size_shadowing_another_set_refuses():
     # $size consumer — refuse toward the compile fallback, which keeps
     # Mongo's read-from-input-doc projection semantics
     with pytest.raises(PipelineError, match="no \\$size"):
-        mixed_requests_from_pipeline([
+        routed_requests_from_pipeline([
             {"$group": {"_id": {"et": "$e"},
                         "a": {"$addToSet": "$x"},
                         "b": {"$addToSet": "$y"},
@@ -415,3 +480,70 @@ def test_explain_mixed_cubes_field(engine, events):
     assert info["route"]["target"] == "cube"
     assert info["route"]["cube"] is None  # two different serving cubes
     assert info["route"]["cubes"] == ["pl", "tl"]
+
+
+# ---------------------------------------------------------------------------
+# one parser for every entry point: plain-accumulator rule, $count over
+# empty input, advise/serve agreement, explain of a lone special
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("lit", [2, 0])
+def test_literal_sum_other_than_one_is_not_served_as_count(
+        engine, events, lit):
+    """Only {$sum: 1} is a count: {$sum: 2} sums 2 per document (and
+    {$sum: 0} is 0), so the pipeline compiles instead of routing a
+    count — and cube creation refuses it."""
+    pipe = [{"$group": {"_id": {"et": "$event_type"}, "x": {"$sum": lit}}}]
+    got = engine.query_pipeline("events", pipe, source_df=events)
+    want = compile_pipeline(events, pipe)
+    assert sorted(got.collect()) == sorted(want.collect())
+    counts = [r["count"] for r in events.groupBy("event_type").count().collect()]
+    assert sorted(r["x"] for r in got.collect()) == sorted(lit * c for c in counts)
+    with pytest.raises(PipelineError, match="\\{\\$sum: 1\\}"):
+        engine.create_cube_from_pipeline("lit_cube", "events", pipe, events)
+
+
+def test_routed_count_emits_no_document_over_empty_input(
+        engine, spark, tmp_path, events):
+    pipe = [{"$match": {"value": {"$gt": 1e9}}}, {"$count": "n"}]
+    assert compile_pipeline(events, pipe).collect() == []
+    # source fallback (no cube registered)
+    bare = OlapEngine(spark, str(tmp_path / "bare"))
+    assert bare.query_pipeline("events", pipe, source_df=events).collect() == []
+    # cube-served: the filtered count cube holds no cells
+    engine.create_cube_from_pipeline("empty_cnt", "events", [
+        {"$match": {"value": {"$gt": 1e9}}},
+        {"$group": {"_id": {"et": "$event_type"}, "n": {"$sum": 1}}}], events)
+    assert engine.explain("events", pipe)["route"]["cube"] == "empty_cnt"
+    assert engine.query_pipeline("events", pipe).collect() == []
+
+
+def test_advise_accepts_sortbycount_and_query_serves_it(engine, events):
+    pipe = [{"$sortByCount": "$event_type"}]
+    advice = engine.advise_cubes([("events", pipe)], {"events": events},
+                                 apply=True)
+    assert advice.cubes, "advisor refused a routable $sortByCount"
+    assert engine.explain("events", pipe)["route"]["target"] == "cube"
+    out = engine.query_pipeline("events", pipe)  # source_df=None: routed
+    rows = out.collect()
+    assert sorted(rows) == sorted(compile_pipeline(events, pipe).collect())
+    assert [r["count"] for r in rows] == sorted(
+        (r["count"] for r in rows), reverse=True)
+
+
+def test_explain_lone_special_route(engine, events):
+    engine.create_cube(CubeSpec(
+        name="tl", source="events",
+        dimensions=(Dimension("event_type"), Dimension("value")),
+        measures=(Measure("cells_n", "count"),)), events)
+    route = engine.explain("events", [
+        {"$group": {"_id": {"et": "$event_type"}, "med": MED}}])["route"]
+    assert route["target"] == "cube" and route["cube"] == "tl"
+    assert route["rewrite"].startswith("special-family aggregate")
+    assert "parts" not in route
+    route = engine.explain("events", [
+        {"$group": {"_id": {"et": "$event_type"},
+                    "p": {"$percentile": {"input": "$value", "p": [0.5]}}}}]
+    )["route"]
+    assert route["cube"] == "tl"
+    assert route["rewrite"].endswith("post-transform: array_wrap")
